@@ -4,9 +4,32 @@ The reference consumes CloudFoundry's firehose over a websocket
 (go-nozzle consumer.go:126-156; path /firehose/<subscription_id> built in
 noaa firehose.go:42-44) after fetching a UAA OAuth token
 (go-nozzle token.go:37-66). The stream is NOT replayable — go-nozzle just
-reads the socket. Spark mapping: ``SimpleDataSourceStreamReader``, whose
-contract (driver-side prefetch + cache until commit) is exactly what a
+reads the socket. Spark mapping: a ``SimpleDataSourceStreamReader``,
+whose contract (driver-side prefetch + cache until commit) is what a
 non-replayable socket needs for at-least-once micro-batching.
+
+Two readers split the work:
+
+- ``FirehoseStreamReader.read(start)`` reads one range off the socket
+  and decodes it to row tuples: the connection, the batch-cut rule
+  (``maxBatchRows`` rows or a 50 ms gap), the retry budget, the idle
+  timeout and 1008 accounting all live there.
+- ``ReadAheadStreamReader`` is what Spark drives. It wraps the first
+  and reads one range ahead, as go-nozzle reads its websocket on its own
+  goroutine (consumer.go:47-49,149): when it hands range k to Spark it
+  starts reading range k+1 on one background thread, so receive and
+  decode run while Spark runs batch k. The thread also packs the rows
+  into one ``pyarrow.RecordBatch``, which Spark's source runner ships to
+  the JVM as it is instead of converting row by row.
+
+Memory and loss bounds. At most one range is read ahead, so the source
+holds about two batches (``maxBatchRows`` each); while the read-ahead
+range is full the reader stops receiving and TCP backpressure reaches
+Doppler as before, with its 1008 slow-consumer close. The read-ahead
+range has no offset yet, so a query stop drops it, as it drops the
+kernel socket buffer: the loss on stop is at most one ``maxBatchRows``
+range plus that buffer. After a restart the prefetched-but-uncommitted
+ranges are dropped and counted (``readBetweenOffsets``).
 
 Source options (all strings, per the DataSource API):
 
@@ -42,6 +65,7 @@ from __future__ import annotations
 
 import json
 import logging
+import threading
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
@@ -126,10 +150,14 @@ def firehose_url(
 
 
 class FirehoseStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side reader. Offsets are a monotonically increasing record
-    counter; SimpleDataSourceStreamReader caches read batches until the
-    checkpoint commits, giving at-least-once over the non-replayable
-    socket (stronger than the reference's drop-on-overflow, ST1)."""
+    """Reads one offset range off the socket per ``read()`` call and
+    decodes it to row tuples. Offsets are a monotonically increasing
+    record counter. In a query, ``ReadAheadStreamReader`` calls
+    ``read()`` one range ahead of Spark, on a background thread, and
+    Spark's simple-reader wrapper caches each range it is handed until
+    the checkpoint commits, giving at-least-once over the non-replayable
+    socket (stronger than the reference's drop-on-overflow, ST1).
+    ``read()`` is not thread-safe: one call at a time."""
 
     def __init__(self, options: dict) -> None:
         self.options = options
@@ -431,6 +459,90 @@ def _decode_dropsonde(msg: bytes) -> tuple:
     return _envelope_dict_to_tuple(decode_envelope(bytes(msg)))
 
 
+def rows_to_record_batch(rows: list[tuple]):
+    """Envelope row tuples -> one ``pyarrow.RecordBatch``, built a column
+    at a time. Equal to what pyspark's row-by-row
+    ``records_to_arrow_batches`` builds from the same rows, at a fraction
+    of its cost."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(schemas.ENVELOPE_SCHEMA)
+    cols = zip(*rows) if rows else [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+
+
+class _ReadAhead(threading.Thread):
+    """One background read of the range that starts at ``offset``.
+    A daemon thread, so it never keeps the source-runner process alive
+    and a query stop never waits for it."""
+
+    def __init__(self, read, offset: dict) -> None:
+        super().__init__(name="firehose-read-ahead", daemon=True)
+        self.offset = offset
+        self._read = read
+        self._out = self._error = None
+        self.start()
+
+    def run(self) -> None:
+        try:
+            self._out = self._read(self.offset)
+        except BaseException as e:
+            self._error = e
+
+    def result(self):
+        self.join()
+        if self._error is not None:
+            raise self._error
+        return self._out
+
+
+class ReadAheadStreamReader(SimpleDataSourceStreamReader):
+    """The reader Spark drives: ``FirehoseStreamReader`` plus one range
+    of read-ahead (module docstring). ``read(start)`` returns the range
+    the background thread read from ``start`` and starts reading the
+    next one. A read-ahead from any other offset (Spark restarted the
+    range) is discarded and the range is read synchronously. An error
+    in the background read is raised by the next ``read()``."""
+
+    def __init__(self, reader: FirehoseStreamReader) -> None:
+        self.reader = reader
+        self._ahead: _ReadAhead | None = None
+
+    def initialOffset(self) -> dict:
+        return self.reader.initialOffset()
+
+    def _read_batch(self, start: dict):
+        rows, end = self.reader.read(start)
+        return rows_to_record_batch(list(rows)), end
+
+    def read(self, start: dict) -> tuple[Iterator, dict]:
+        ahead, self._ahead = self._ahead, None
+        if ahead is not None and ahead.offset != start:
+            # the reader is busy until the stale read finishes; its rows
+            # (or its error) belong to a range Spark no longer asks for
+            ahead.join()
+            logging.getLogger("kafka_firehose_nozzle_spark").warning(
+                "firehose: asked for offset %s, discarding the range read "
+                "ahead from %s",
+                start,
+                ahead.offset,
+            )
+            ahead = None
+        batch, end = ahead.result() if ahead else self._read_batch(start)
+        self._ahead = _ReadAhead(self._read_batch, end)
+        return iter([batch] if batch.num_rows else ()), end
+
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+        return self.reader.readBetweenOffsets(start, end)
+
+    def commit(self, end: dict) -> None:
+        self.reader.commit(end)
+
+
 class FirehoseDataSource(DataSource):
     """spark.readStream.format("firehose") after
     spark.dataSource.register(FirehoseDataSource)."""
@@ -442,5 +554,5 @@ class FirehoseDataSource(DataSource):
     def schema(self):
         return schemas.ENVELOPE_SCHEMA
 
-    def simpleStreamReader(self, schema) -> FirehoseStreamReader:
-        return FirehoseStreamReader(self.options)
+    def simpleStreamReader(self, schema) -> ReadAheadStreamReader:
+        return ReadAheadStreamReader(FirehoseStreamReader(self.options))

@@ -129,7 +129,12 @@ class _FrameIO:
     def __init__(self, sock: socket.socket, role: str):
         self._sock = sock
         self._role = role
+        # received bytes; the unparsed part starts at ``_pos``. Parsed
+        # frames only move ``_pos``: the consumed prefix is cut off
+        # when the next socket read is appended, once per read instead
+        # of once per frame
         self._buf = b""
+        self._pos = 0
         self._closed = False
         # fragmented-message reassembly state lives on the instance so a
         # recv() timeout between fragments resumes cleanly instead of
@@ -156,24 +161,26 @@ class _FrameIO:
             chunk = self._sock.recv(65536)
             if not chunk:
                 raise WSClosed(1006, "connection dropped mid-frame")
-            self._buf += chunk
+            self._buf = self._buf[self._pos :] + chunk
+            self._pos = 0
 
     def _parse_buffered_frame(self) -> tuple[bool, int, bytes] | None:
-        """Parse one frame from self._buf, consuming it only when fully
-        buffered; return None (buffer untouched) when incomplete.
-        Protocol violations raise immediately — those are fatal to the
-        connection, so destroying the parse position is fine."""
-        buf = self._buf
-        if len(buf) < 2:
+        """Parse one frame from self._buf at self._pos, consuming it only
+        when fully buffered; return None (position untouched) when
+        incomplete. Protocol violations raise immediately — those are
+        fatal to the connection, so destroying the parse position is
+        fine."""
+        buf, off = self._buf, self._pos
+        if len(buf) < off + 2:
             return None
-        b0, b1 = buf[0], buf[1]
+        b0, b1 = buf[off], buf[off + 1]
         if b0 & 0x70:
             raise WSProtocolError("RSV bits set without an extension")
         fin = bool(b0 & 0x80)
         opcode = b0 & 0x0F
         masked = bool(b1 & 0x80)
         n = b1 & 0x7F
-        off = 2
+        off += 2
         if n == 126:
             if len(buf) < off + 2:
                 return None
@@ -200,7 +207,7 @@ class _FrameIO:
             if len(buf) < off + n:
                 return None
             payload = buf[off : off + n]
-        self._buf = buf[off + n :]
+        self._pos = off + n
         return fin, opcode, payload
 
     def _send_frame(self, opcode: int, payload: bytes) -> None:

@@ -1,15 +1,12 @@
-"""Round-11 optimization profiler.
+"""Query profiler for the analytics registry.
 
 For each headline query: time DataFrame CONSTRUCTION (driver-side plan
 building — register views, py4j round trips, any plan-time collect) apart
 from EXECUTION (the bench's count() action), run three passes, and dump
-`.explain("formatted")` to plans/r11/<query>_<tag>.txt.
-
-Also emits per-query event-log stage summaries when --eventlog is given,
-so shuffle/task time can be attributed without the (disabled) UI.
+`.explain("formatted")` to plans/profile/<query>_<tag>.txt.
 
 Usage:
-    python tools/profile_r11.py [--tag before] [--queries a,b,c]
+    python tools/profile.py [--tag before] [--queries a,b,c]
         [--sf-dir /root/testdata/sf0.1] [--noop]
 """
 
@@ -43,7 +40,7 @@ def main() -> None:
     args = ap.parse_args()
 
     names = [q for q in args.queries.split(",") if q] or BENCH_QUERIES
-    spark = get_spark("kfn-profile-r11")
+    spark = get_spark("kfn-profile")
     configure_shuffle_for_input(spark, args.sf_dir)
     qs = entrymod.queries()
 
@@ -53,7 +50,7 @@ def main() -> None:
         "event_type"
     ).count().count()
 
-    plans_dir = os.path.join(HERE, "plans", "r11")
+    plans_dir = os.path.join(HERE, "plans", "profile")
     os.makedirs(plans_dir, exist_ok=True)
 
     out = {}
